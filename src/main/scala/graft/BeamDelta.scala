@@ -3,7 +3,7 @@ package graft
 
 /** A/B harness for the beamSearch per-hop localCheckpoint (r12):
   * alternates `graft.beam.ckpt` on/off in ONE JVM so the arms share
-  * warmup and box conditions — the ClustersDelta discipline (between-
+  * warmup and box conditions — the interleaved-arm discipline (between-
   * JVM variance on this box is ±50%+ and would swamp the delta).
   * Run manually:
   *

@@ -2,7 +2,7 @@ package graft
 
 /** A/B harness for the bpeTrain per-round lineage pin (r12):
   * alternates `graft.bpe.ckpt` on/off in ONE JVM so the arms share
-  * warmup and box conditions — the BeamDelta/ClustersDelta discipline
+  * warmup and box conditions — the BeamDelta discipline
   * (between-JVM variance on this box is ±50%+ and would swamp the
   * delta). Times tokenizer_bpe (trainer only) and tokenizer_apply
   * (trainer + encode pass). Run manually:

@@ -45,8 +45,8 @@ object Explain {
         "exact-audit columns"),
       "pipeline_dsir" -> ("per-feature-bucket branches read the one " +
         "persisted feature explode; count tables are bucket-sized"),
-      "dedup_clusters" -> ("label-propagation rounds re-print the " +
-        "cached edge table; convergence bounds the round count"),
+      "dedup_clusters" -> ("components are labelled while the frame is " +
+        "built (driver union-find below 2M edges); the plan reads the labels"),
       "graph_pagerank" -> ("per-iteration rank⋈adjacency branches over " +
         "the cached adjacency; iterations bound the re-prints"),
       "graph_communities" -> ("LPA rounds re-print the cached " +

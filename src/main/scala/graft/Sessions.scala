@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One local-session builder for every runnable main (Bench, Verify,
-  * Probe, KernelDelta, ClustersDelta): the oracle compare depends on
-  * some of these confs (UTC timestamps), and the bench artifact on
-  * others (cpus = shuffle partitions — the driver measures at 32), so
+  * Probe, KernelDelta): the oracle compare depends on some of these
+  * confs (UTC timestamps), and the bench artifact on others (cpus =
+  * shuffle partitions — the driver measures at 32), so
   * four hand-copied builder blocks drifting independently is how the
   * round-3 "measured under different parallelism than the driver"
   * drift happened. Explain keeps its own deliberately tiny session

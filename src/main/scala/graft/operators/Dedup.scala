@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.functions.F
 
 /** Deduplication operators for LLM training data, SURVEY.md §2d.
@@ -575,25 +576,56 @@ object Dedup {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  /** Connected components over near-dup pairs: iterative min-label
-    * propagation with pointer halving — each round a node adopts the
-    * min of (its label, its neighbors' labels, its label's label).
-    * The label-of-label hop doubles the propagation distance per
-    * round, so convergence is O(log diameter) instead of O(diameter).
+  /** Connected components over near-dup pairs, in one of two arms
+    * chosen by the size of the symmetrized edge table.
     *
-    * Per-round state is truncated with `localCheckpoint` by default
-    * (fast, executor-storage-pinned); pass `checkpointDir` on a real
-    * cluster to checkpoint to reliable storage instead — an executor
-    * loss mid-job then recovers rather than failing the query.
-    * Convergence is read from an `observe` metric computed inside the
-    * checkpoint action itself: one Spark job per round, no separate
-    * isEmpty/count pass.
+    * The edges (each pair plus its flip) are checkpointed once and
+    * counted, one cheap job over the checkpoint. The count picks the
+    * arm through the rule that also sizes the distributed loop's
+    * shuffles: one partition per ~2M edges, so `count / 2M + 1 == 1`
+    * means the whole graph fits one partition's worth of rows.
     *
-    * Input: (a_id, b_id) pairs. Output: (doc_id, cluster_id) with
-    * cluster_id = min doc_id of the component; keep-one dedup keeps
-    * doc_id == cluster_id. */
+    *  - Driver arm (one partition's worth of edges, BIGINT ids — other
+    *    id types take the distributed arm at any size): ONE job
+    *    collects the edges as primitive `Long` arrays (one packed
+    *    array per partition, never a `Row` per edge) and a union-find
+    *    labels them on the driver. Arbitrary (sparse, > 2^32) ids map
+    *    to dense slots through their sorted distinct array, so the
+    *    smaller slot is the smaller id and every root is its
+    *    component's minimum. It always converges: `maxIter` does not
+    *    apply. Driver bytes at the bound (just under 2M edges, so at
+    *    most 2M nodes): 32 MB of collected edges, 16 MB of sorted ids
+    *    and 8 MB of parents, then the result as a one-partition local
+    *    relation of ~86 B per node (172 MB measured for 2M nodes on
+    *    JDK 17), held while the caller's plan references it and
+    *    shipped to an executor inside that partition's task.
+    *  - Distributed arm (larger graphs): iterative min-label
+    *    propagation with pointer halving. Each round a node adopts the
+    *    min of (its label, its neighbors' labels, its label's label);
+    *    the label-of-label hop doubles the propagation distance per
+    *    round, so convergence takes O(log diameter) rounds, at most
+    *    `maxIter`. Per-round state is truncated with
+    *    `localCheckpoint`; pass `checkpointDir` on a real cluster to
+    *    checkpoint to reliable storage instead, so an executor loss
+    *    mid-job recovers rather than failing the query. Convergence is
+    *    read from an `observe` metric computed inside the checkpoint
+    *    action itself: one Spark job per round, no separate
+    *    isEmpty/count pass.
+    *
+    * Input: (a_id, b_id) pairs. Output: (doc_id, cluster_id), one row
+    * per node that appears in any pair (a self-loop pair included),
+    * with cluster_id = min doc_id of the component; keep-one dedup
+    * keeps doc_id == cluster_id. Both arms return the same rows. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 25,
-                  checkpointDir: Option[String] = None): DataFrame = {
+                  checkpointDir: Option[String] = None): DataFrame =
+    dupClustersArm(pairs, maxIter, checkpointDir, driverArm = true)
+
+  /** [[dupClusters]] with the driver arm switchable off: `driverArm =
+    * false` runs the distributed loop at any size, so specs can pin
+    * that arm's lineage, parity and job count on small graphs. */
+  private[graft] def dupClustersArm(pairs: DataFrame, maxIter: Int,
+                                    checkpointDir: Option[String],
+                                    driverArm: Boolean): DataFrame = {
     val spark = pairs.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def ckpt(df: DataFrame): DataFrame =
@@ -607,20 +639,87 @@ object Dedup {
         struct(col("a_id"), col("b_id")),
         struct(col("b_id").as("a_id"), col("a_id").as("b_id")))).as("e"))
       .select(col("e.a_id").as("a_id"), col("e.b_id").as("b_id")))
-    // Initialize each node to min(id, min neighbor): the same shuffle a
-    // distinct() would cost, but it fuses the whole first propagation
-    // round into initialization — one fewer join-round to convergence.
+    // One partition per ~2M edges: the same rule that picks 32 at sf0.1
+    // picks thousands at 100 TB, and a graph that fits one partition
+    // fits the driver. The count reads the checkpointed RDD directly:
+    // one job, where Dataset.count() adds an aggregate shuffle stage.
+    val target = edges.queryExecution.toRdd.count() / 2000000L + 1L
+    val labels =
+      if (driverArm && target == 1L && edges.schema("a_id").dataType == LongType)
+        labelOnDriver(edges)
+      else labelDistributed(edges, target, maxIter, ckpt)
+    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** Driver arm of [[dupClusters]]: union-find over the collected
+    * symmetrized edges, returned as a local (id, label) relation in
+    * the edges' session. */
+  private def labelOnDriver(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // One job; each partition ships one packed [a0, b0, a1, b1, ...].
+    val chunks = edges.queryExecution.toRdd.mapPartitions { rows =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1), "dupClusters: null id in pairs")
+        b += r.getLong(0); b += r.getLong(1)
+      }
+      Iterator.single(b.result())
+    }.collect()
+    // Every node is some edge's a_id (the edges are symmetric), so the
+    // sorted distinct a_ids are the node set.
+    val all = new Array[Long](chunks.iterator.map(_.length / 2).sum)
+    var k = 0
+    chunks.foreach { c =>
+      var i = 0
+      while (i < c.length) { all(k) = c(i); k += 1; i += 2 }
+    }
+    java.util.Arrays.sort(all)
+    var m = 0
+    k = 0
+    while (k < all.length) {
+      if (m == 0 || all(k) != all(m - 1)) { all(m) = all(k); m += 1 }
+      k += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, m)
+    val parent = Array.tabulate(m)(identity)
+    def find(x0: Int): Int = { // path halving
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    // each undirected edge once (its flip is in the table too);
+    // self-loops only contribute their node
+    chunks.foreach { c =>
+      var i = 0
+      while (i < c.length) {
+        if (c(i) < c(i + 1)) {
+          val ra = find(java.util.Arrays.binarySearch(ids, c(i)))
+          val rb = find(java.util.Arrays.binarySearch(ids, c(i + 1)))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        i += 2
+      }
+    }
+    // one partition, as the distributed arm's labels have at this size
+    ids.indices.map(i => (ids(i), ids(find(i)))).toDF("id", "label").coalesce(1)
+  }
+
+  /** Distributed arm of [[dupClusters]]: min-label propagation with
+    * pointer halving over `edges` (already checkpointed), its shuffles
+    * sized to `target` partitions, clamped to the session setting. */
+  private def labelDistributed(edges: DataFrame, target: Long, maxIter: Int,
+                               ckpt: DataFrame => DataFrame): DataFrame = {
+    val spark = edges.sparkSession
     // Right-size the iteration's shuffles from the ACTUAL edge count:
     // every round's joins/aggs inherit spark.sql.shuffle.partitions,
     // which the session sizes for corpus-scale scans (thousands on a
     // real cluster) — but round state here is edge-scale, and tiny
     // rounds spread over many near-empty tasks pay scheduler overhead
     // per round instead of doing work (measured: the same sf0.1 query
-    // swings 1.5-6 s at 32 partitions purely on task dispatch;
-    // ClustersDelta pins the win at ~30% with interleaved arms). One
-    // partition per ~2M edges, clamped to the session setting — the
-    // same rule that picks 32 at sf0.1 picks thousands at 100 TB. The
-    // count is one cheap job over the already-checkpointed edges.
+    // swings 1.5-6 s at 32 partitions purely on task dispatch; an
+    // interleaved same-JVM A/B pinned the win at ~30%).
     //
     // The smaller width is scoped to a CHILD session (shared context,
     // cache and checkpoint state; its own SQLConf): no session-global
@@ -633,11 +732,7 @@ object Dedup {
     // simply skips the clamp.
     val sessionParts = scala.util.Try(
       spark.conf.get("spark.sql.shuffle.partitions").toLong).getOrElse(Long.MaxValue)
-    // -Dgraft.clusters.autosize=false pins the session setting (the
-    // ClustersDelta A/B harness flips this to measure the sizing win)
-    val autosize = !"false".equals(System.getProperty("graft.clusters.autosize"))
-    val target = math.max(1L, math.min(sessionParts, edges.count() / 2000000L + 1L))
-    val loop = if (autosize && target < sessionParts) {
+    val loop = if (target < sessionParts) {
       val s = spark.newSession()
       // newSession() derives SQLConf from SparkConf DEFAULTS, not the
       // caller's runtime session — copy the caller's modified entries
@@ -651,6 +746,9 @@ object Dedup {
     def rebind(to: org.apache.spark.sql.SparkSession, df: DataFrame): DataFrame =
       if (df.sparkSession eq to) df else to.createDataFrame(df.rdd, df.schema)
     val loopEdges = rebind(loop, edges)
+    // Initialize each node to min(id, min neighbor): the same shuffle a
+    // distinct() would cost, but it fuses the whole first propagation
+    // round into initialization — one fewer join-round to convergence.
     var labels = ckpt(loopEdges.groupBy(col("a_id").as("id"))
       .agg(least(col("a_id"), min(col("b_id"))).as("label")))
     var converged = false
@@ -686,8 +784,6 @@ object Dedup {
     // hand the result back in the CALLER's session (via the checkpoint
     // RDD) so downstream planning keeps the caller's shuffle width
     rebind(spark, labels)
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .orderBy(col("doc_id"))
   }
 
   /** End-to-end near-dup clustering: verified Jaccard near-dup pairs →

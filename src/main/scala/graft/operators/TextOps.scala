@@ -1348,9 +1348,11 @@ object TextOps {
     * total instead of the previous 32 corpus-frame passes. Both arms
     * replay the identical integer recurrence (Scala Long `/` and
     * Spark `div` both truncate toward zero) and are spec-asserted
-    * equal. Overflow parity: a driver/Spark gradient term saturates
-    * only past ~9·10⁹ corpus rows in one group — the same 2⁶³ budget
-    * the previous row-grain sum had. */
+    * equal; a group with a null feature (a null-text doc) counts in N
+    * and is skipped by every gradient sum in both. Overflow parity: a
+    * driver/Spark gradient term saturates only past ~9·10⁹ corpus rows
+    * in one group — the same 2⁶³ budget the previous row-grain sum
+    * had. */
   def textQualityTrain(documents: DataFrame, iters: Int = 32,
                        lrDen: Long = 40L, histCollectMax: Int = 1 << 20): DataFrame = {
     val spark = documents.sparkSession
@@ -1364,11 +1366,12 @@ object TextOps {
       val w =
         if (nGroups <= histCollectMax) {
           // Driver arm: collect the bounded histogram, iterate locally.
-          val rows = hist.select("x0", "x1", "x2", "x3", "x4", "y", "cnt")
-            .collect()
-            .map(r => Array(r.getLong(0), r.getLong(1), r.getLong(2),
-              r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
-          val n = rows.iterator.map(_(6)).sum
+          val groups = hist.select("x0", "x1", "x2", "x3", "x4", "y", "cnt").collect()
+          val n = groups.iterator.map(_.getLong(6)).sum
+          // A group with a null feature (null text) counts in n but adds
+          // nothing to the gradient, as the Spark arm's SQL sum skips it.
+          val rows = groups.filterNot(r => (0 to 5).exists(r.isNullAt))
+            .map(r => Array.tabulate(7)(r.getLong))
           val w = Array.fill(5)(0L)
           for (_ <- 1 to iters) {
             val g = Array.fill(5)(0L)

@@ -1098,8 +1098,10 @@ class DupClustersSpec extends org.scalatest.funsuite.AnyFunSuite {
     val n = 300L
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val labels = graft.operators.Dedup.dupClusters(pairs, maxIter = 25,
-      checkpointDir = Some(ckptDir))
+    // the distributed arm, forced: a graph this small takes the driver
+    // arm by default, and this pins the distributed loop's lineage
+    val labels = graft.operators.Dedup.dupClustersArm(pairs, maxIter = 25,
+      checkpointDir = Some(ckptDir), driverArm = false)
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got.size == n)
     (1L to n).foreach(i => assert(got(i) == 1L, s"node $i"))
@@ -1126,30 +1128,117 @@ class DupClustersSpec extends org.scalatest.funsuite.AnyFunSuite {
 }
 
 class DupClustersRandomSpec extends org.scalatest.funsuite.AnyFunSuite {
-  test("random graphs match a union-find reference (seeded)") {
-    val spark = TestSpark.spark
+  private lazy val spark = TestSpark.spark
+
+  /** Union-find reference over dense ids 0 until n, always attaching the
+    * larger root under the smaller so each root IS its component's min
+    * id: node -> label for every node of any edge. */
+  private def reference(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int =
+      if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toInt), find(b.toInt))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct
+      .map(i => i -> find(i.toInt).toLong).toMap
+  }
+
+  /** dupClusters' labels from the default (driver) arm and from the
+    * forced distributed arm. */
+  private def bothArms(edges: Seq[(Long, Long)]): (Map[Long, Long], Map[Long, Long]) = {
     import spark.implicits._
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+      val rows = df.as[(Long, Long)].collect()
+      assert(rows.map(_._1).distinct.length == rows.length, "one row per node")
+      rows.toMap
+    }
+    val pairs = edges.toDF("a_id", "b_id")
+    (labels(graft.operators.Dedup.dupClusters(pairs)),
+      labels(graft.operators.Dedup.dupClustersArm(pairs, 25, None, driverArm = false)))
+  }
+
+  test("random graphs match a union-find reference (seeded)") {
     val rnd = new scala.util.Random(53)
     for (trial <- 1 to 3) {
       val n = 30 + rnd.nextInt(40)
       val edges = (1 to 60)
         .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2).distinct
-      // union-find reference, always attaching the larger root under
-      // the smaller so each root IS its component's min id
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int =
-        if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(i => i -> find(i.toInt).toLong).toMap
-      val got = graft.operators.Dedup.dupClusters(edges.toDF("a_id", "b_id"))
-        .as[(Long, Long)].collect().toMap
-      assert(got == expected, s"trial $trial (n=$n, ${edges.size} edges)")
+      val expected = reference(n, edges)
+      val (driver, distributed) = bothArms(edges)
+      assert(driver == expected, s"driver arm, trial $trial (n=$n, ${edges.size} edges)")
+      assert(distributed == expected,
+        s"distributed arm, trial $trial (n=$n, ${edges.size} edges)")
     }
+  }
+
+  test("sparse ids above 2^32, duplicated and reversed edges, self-loops: " +
+    "both arms match the reference (seeded)") {
+    val rnd = new scala.util.Random(71)
+    for (trial <- 1 to 3) {
+      val n = 40 + rnd.nextInt(40)
+      // strictly increasing dense -> sparse map: it preserves every
+      // component's min, so the dense reference labels the sparse graph
+      val sparse = Iterator.iterate(1L << 32 | rnd.nextInt(1000).toLong)(
+        _ + 1L + (rnd.nextLong() >>> 34)).take(n).toArray
+      val base = (1 to 50)
+        .map(_ => (rnd.nextInt(n - 1).toLong, rnd.nextInt(n - 1).toLong))
+      // node n-1 appears only in a self-loop and keeps its own row
+      val edges = base ++ base.take(10) ++ base.take(10).map(_.swap) ++
+        Seq((n - 1L, n - 1L), (base.head._1, base.head._1))
+      val expected = reference(n, edges).map { case (k, v) => sparse(k.toInt) -> sparse(v.toInt) }
+      assert(expected(sparse(n - 1)) == sparse(n - 1))
+      val (driver, distributed) =
+        bothArms(edges.map { case (a, b) => (sparse(a.toInt), sparse(b.toInt)) })
+      assert(driver == expected, s"driver arm, trial $trial (n=$n)")
+      assert(distributed == expected, s"distributed arm, trial $trial (n=$n)")
+    }
+  }
+
+  test("the driver arm fires a constant number of jobs, fewer than the " +
+    "distributed arm's rounds (300-node chain)") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // Jobs fired while dupClusters builds its frame, on this thread's job
+    // group. A fence job in a second group flushes the async listener
+    // bus: its start arrives after every earlier job's, so the count is
+    // exact, not timing-dependent.
+    def jobsFired(build: => org.apache.spark.sql.DataFrame): Int = {
+      val tag = s"dup-clusters-jobs-${java.util.UUID.randomUUID()}"
+      val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+      val fence = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`tag`) => seen.incrementAndGet(); ()
+            case Some(g) if g == tag + "-fence" => fence.countDown()
+            case _ => ()
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(tag, "dupClusters job count")
+        build
+        sc.setJobGroup(tag + "-fence", "listener fence")
+        sc.parallelize(Seq(1), 1).count()
+        assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job not seen")
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      seen.get()
+    }
+    val n = 300L
+    val pairs = (1L until n).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val driver = jobsFired(graft.operators.Dedup.dupClusters(pairs))
+    val distributed = jobsFired(
+      graft.operators.Dedup.dupClustersArm(pairs, 25, None, driverArm = false))
+    // three jobs: edge checkpoint, edge count, edge collect; the
+    // distributed arm adds a checkpoint and its join stages per round
+    assert(driver <= 3, s"driver arm fired $driver jobs")
+    assert(driver < distributed, s"driver arm $driver jobs vs distributed $distributed")
   }
 }
 
@@ -2100,6 +2189,34 @@ class QualityTrainSpec extends org.scalatest.funsuite.AnyFunSuite {
     val junkKept = junk.count { case (id, _) => scored(id) }
     assert(cleanKept >= 38, s"trained filter keeps clean docs: $cleanKept/40")
     assert(junkKept <= 2, s"trained filter rejects planted junk: $junkKept/40")
+  }
+
+  /** w_micro from the driver arm (default) and the Spark arm
+    * (histCollectMax = 0 sends every histogram past the collect bound). */
+  private def bothArms(docs: org.apache.spark.sql.DataFrame): (Seq[Long], Seq[Long]) = {
+    def wMicro(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.orderBy("feature_id").collect().map(_.getLong(2)).toSeq
+    (wMicro(graft.operators.TextOps.textQualityTrain(docs)),
+      wMicro(graft.operators.TextOps.textQualityTrain(docs, histCollectMax = 0)))
+  }
+
+  test("textQualityTrain: the Spark arm trains the driver arm's exact weights") {
+    val (driver, sparkArm) = bothArms(Tables.documents(TestSpark.spark, TestSpark.sf))
+    assert(driver.exists(_ != 0L), s"training moved no weight: $driver")
+    assert(sparkArm == driver)
+  }
+
+  test("textQualityTrain: a null-text document trains identically in both arms") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val docs = Seq[(Long, String)](
+      (1L, (0 until 60).map(j => if (j % 5 == 0) "the" else s"word$j").mkString(" ")),
+      (2L, "zx1 zx2 zx3"),
+      (3L, null),
+      (4L, (0 until 45).map(j => if (j % 3 == 0) "of" else s"term$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    val (driver, sparkArm) = bothArms(docs)
+    assert(sparkArm == driver)
   }
 }
 
