@@ -60,33 +60,15 @@ object Explain {
     // audit was blindsided exactly there). Count the Spark jobs fired
     // during fn() plus the construction wall time so driver-side
     // fixture work is first-class audit evidence.
-    val jobsSeen = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobsSeen.incrementAndGet(); ()
-      }
-    })
-    // the listener bus is async: wait until the count is stable so a
-    // query's last fixture job can't leak into the next query's column
-    def stableJobs(): Int = {
-      var prev = -1
-      var cur = jobsSeen.get()
-      var spins = 0
-      while (cur != prev && spins < 40) {
-        prev = cur; Thread.sleep(50); cur = jobsSeen.get(); spins += 1
-      }
-      cur
-    }
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val j0 = stableJobs()
-      val t0 = System.nanoTime()
-      val plan = try {
-        fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      } catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
-      val fixtureSecs = (System.nanoTime() - t0) / 1e9
-      val fixtureJobs = stableJobs() - j0
+      val ((plan, fixtureSecs), fixtureJobs) = Jobs.fired(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        val plan = try {
+          fn(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+        } catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
+        (plan, (System.nanoTime() - t0) / 1e9)
+      }
       sb.append(s"\n## $name\n\n```\n$plan```\n")
       def n(pat: String) = pat.r.findAllIn(plan).size
       audit.append(s"| $name | ${n("Scan parquet")} | ${n("InMemoryTableScan")} " +

@@ -40,8 +40,7 @@ object Dedup {
     * `catalog.clearCache()`) between runs, else disk-backed blocks
     * accumulate for the session. */
   private[operators] def materialized(df: DataFrame): DataFrame =
-    if (sys.env.get("GRAFT_NO_MATERIALIZE").contains("true")) df
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Word 3-gram shingles (falls back to whole text when too short). */
   private[operators] def shingles(k: Int = 3): Column =

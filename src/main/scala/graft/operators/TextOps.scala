@@ -626,16 +626,12 @@ object TextOps {
     * nested aggregate-folds deep, and the final table's lineage rides
     * into every downstream read (the tokenizer_apply encode join
     * re-analyzes the whole merge history per reference). Interleaved
-    * same-JVM A/B (BpeDelta): tokenizer_apply 3.40→2.92 s at sf0.1
-    * (−14%), tokenizer_bpe 2.81→2.72 s (noise-level) — the win is the
-    * flat plan under the downstream reads. At the batched trainer's
-    * production shape (32k merges / B=256 ⇒ 128 rounds) the unbroken
-    * lineage would be an analysis-time blowup, not a nicety.
-    * -Dgraft.bpe.ckpt=false pins the persist shape for the harness. */
-  private def pinRound(df: DataFrame): DataFrame =
-    if (!"false".equals(System.getProperty("graft.bpe.ckpt")))
-      df.localCheckpoint(true)
-    else df.persist()
+    * same-JVM A/B in r12 against persist(): tokenizer_apply 3.40→2.92 s
+    * at sf0.1 (−14%), tokenizer_bpe 2.81→2.72 s (noise-level) — the win
+    * is the flat plan under the downstream reads. At the batched
+    * trainer's production shape (32k merges / B=256 ⇒ 128 rounds) the
+    * unbroken lineage would be an analysis-time blowup, not a nicety. */
+  private def pinRound(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** The adjacent-pair count table of a word/symbol frame — shared by
     * the sequential and batched BPE trainers. */
@@ -1338,14 +1334,19 @@ object TextOps {
     *
     * Size-adaptive iteration (the embedding_outliers arm idiom): the
     * histogram is bounded by the quantization grid, not the corpus —
-    * when it fits under `histCollectMax` rows (≤ ~50 MB collected at
-    * the 2²⁰ default) it is collected and all `iters` steps run
+    * when it fits under `histCollectMax` rows (~231 MB collected at
+    * the 2²⁰ default, measured below) it is collected and all `iters` steps run
     * driver-local over the array (one corpus pass, ZERO per-iteration
     * Spark jobs — driver-side metadata like tokenizer_bpe's argmax,
     * bounded by the threshold, never corpus-sized); above the
     * threshold each step is one histogram-sized map-side-combinable
     * aggregate over the persisted histogram — still one corpus scan
-    * total instead of the previous 32 corpus-frame passes. Both arms
+    * total instead of the previous 32 corpus-frame passes. Driver
+    * footprint: `collect()` materializes one `GenericRow` of seven
+    * boxed Longs per group before the `Long` mapping — a synthetic
+    * 2²⁰-group histogram measured a 231 MB driver heap delta after GC
+    * for the collected rows, and 313 MB while the `Array[Long]` copies
+    * (80 MB) are built beside them (JDK 17, Spark 4.1). Both arms
     * replay the identical integer recurrence (Scala Long `/` and
     * Spark `div` both truncate toward zero) and are spec-asserted
     * equal; a group with a null feature (a null-text doc) counts in N

@@ -172,9 +172,11 @@ class ExactlyOnceParquetSink(basePath: String) extends Serializable {
     // append at a fixed offset is rejected/ignored when already there).
     df.write.mode("overwrite").parquet(s"$basePath/epoch=$epochId")
     // Phase 2: atomic commit marker (temp + ATOMIC_MOVE = flush offset).
+    // The marker's name is the whole record (readers list the ledger),
+    // so its body stays empty: counting the batch would re-run it.
     Files.createDirectories(ledgerDir)
     val tmp = ledgerDir.resolve(s".$epochId.tmp")
-    Files.writeString(tmp, String.valueOf(df.count()))
+    Files.write(tmp, Array.emptyByteArray)
     Files.move(tmp, ledgerDir.resolve(s"$epochId.committed"),
       StandardCopyOption.ATOMIC_MOVE)
     true

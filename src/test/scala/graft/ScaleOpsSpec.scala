@@ -1200,36 +1200,9 @@ class DupClustersRandomSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("the driver arm fires a constant number of jobs, fewer than the " +
     "distributed arm's rounds (300-node chain)") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    // Jobs fired while dupClusters builds its frame, on this thread's job
-    // group. A fence job in a second group flushes the async listener
-    // bus: its start arrives after every earlier job's, so the count is
-    // exact, not timing-dependent.
-    def jobsFired(build: => org.apache.spark.sql.DataFrame): Int = {
-      val tag = s"dup-clusters-jobs-${java.util.UUID.randomUUID()}"
-      val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-      val fence = new java.util.concurrent.CountDownLatch(1)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-            case Some(`tag`) => seen.incrementAndGet(); ()
-            case Some(g) if g == tag + "-fence" => fence.countDown()
-            case _ => ()
-          }
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(tag, "dupClusters job count")
-        build
-        sc.setJobGroup(tag + "-fence", "listener fence")
-        sc.parallelize(Seq(1), 1).count()
-        assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job not seen")
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-      seen.get()
-    }
+    // jobs fired while dupClusters builds its frame
+    def jobsFired(build: => org.apache.spark.sql.DataFrame): Int =
+      Jobs.fired(spark.sparkContext)(build)._2
     val n = 300L
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val driver = jobsFired(graft.operators.Dedup.dupClusters(pairs))

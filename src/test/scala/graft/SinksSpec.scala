@@ -81,6 +81,18 @@ class WritersSpec extends AnyFunSuite {
     assert(sink.committedEpochs() == Set(0L, 1L))
   }
 
+  test("exactly-once addBatch fires only the parquet write's jobs on an uncached frame") {
+    val sc = spark.sparkContext
+    val df = Tables.events(spark, TestSpark.sf)
+    val bareDir = java.nio.file.Files.createTempDirectory("graft-eo-bare").toString
+    val bare = Jobs.fired(sc)(df.write.mode("overwrite").parquet(s"$bareDir/epoch=0"))._2
+    val sink = new ExactlyOnceParquetSink(
+      java.nio.file.Files.createTempDirectory("graft-eo-jobs").toString)
+    val (appended, viaSink) = Jobs.fired(sc)(sink.addBatch(df, 0L))
+    assert(appended && bare > 0)
+    assert(viaSink == bare, s"addBatch fired $viaSink jobs, the bare write $bare")
+  }
+
   test("at-least-once writer splits oversized batches recursively") {
     val appended = scala.collection.mutable.Buffer[Seq[Int]]()
     val m = new SinkMetrics
